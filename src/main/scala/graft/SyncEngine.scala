@@ -170,160 +170,169 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
 
     // 1-4: scans + DDL (bucket_exists_guard gives empty catalog, not error)
     val srcCatalog = ObjectStoreCatalog.scanCatalog(spark, srcUri).cache()
-    val tgtCatalog = ObjectStoreCatalog.scanCatalog(spark, dstUri)
-    ObjectStoreCatalog.ensureBucket(spark, dstUri)
+    // The cached catalog and diff are released in the finallys below,
+    // after the ledger commit: the cache manager holds them until then, and
+    // ContinuousSync runs a cycle per tick, so a cache left behind would
+    // grow the heap by one catalog + diff per mapping per tick.
+    try {
+      val tgtCatalog = ObjectStoreCatalog.scanCatalog(spark, dstUri)
+      ObjectStoreCatalog.ensureBucket(spark, dstUri)
 
-    // 5-6b: diff join + predicate (replaces the reference's N+1 loop).
-    // Concurrent mode pins the ledger snapshot eagerly: another mapping's
-    // commit swaps the ledger DIRECTORY, and a lazy read (or a cache
-    // eviction's recompute) over the old directory would hit deleted
-    // files mid-cycle. The snapshot is also the correct semantics — a
-    // cycle diffs against the ledger as of its start, and other mappings'
-    // commits never touch this mapping's rows.
-    val ledgerRead = readLedger(spark, config.ledgerPath)
-    val ledger = if (concurrent) ledgerRead.localCheckpoint(true) else ledgerRead
-    val decided = SyncOps.catalogLedgerDiff(srcCatalog, ledger, mid).cache()
-    val toCopy = SyncOps.needsSync(decided)
-
-    // 6c-6d: distributed stream copy. Receipts MUST be materialized before
-    // reuse: the executor is side-effecting, and a lazy plan would re-run
-    // the copies once per downstream action.
-    val receipts = materialize(spark,
-      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
-      scratch + "/copy_receipts")
-
-    // post-copy tagging hook (README "Known limitations" → code): the
-    // reference sets Content-Type/user-metadata headers on every PUT;
-    // the Hadoop-FS copy path cannot, so a deployment-supplied tagger
-    // gets exactly the success receipts' header columns to re-apply via
-    // its provider SDK. Noop (the default) costs nothing; the guard
-    // keeps all-skip cycles from running a count job per mapping when
-    // no tagger is configured. The frame is pinned once (Barriers) so
-    // the isEmpty guard and the tagger's own action share one evaluation
-    // of the receipts join instead of running it twice (r15 advisory).
-    var tagFailed = 0L
-    if (!(tagger eq graft.sources.PostCopyTagger.Noop)) {
-      val tagged = graft.operators.Barriers.materialize(
-        SyncEngine.taggableReceipts(toCopy, receipts), eager = true)
+      // 5-6b: diff join + predicate (replaces the reference's N+1 loop).
+      // Concurrent mode pins the ledger snapshot eagerly: another mapping's
+      // commit swaps the ledger DIRECTORY, and a lazy read (or a cache
+      // eviction's recompute) over the old directory would hit deleted
+      // files mid-cycle. The snapshot is also the correct semantics — a
+      // cycle diffs against the ledger as of its start, and other mappings'
+      // commits never touch this mapping's rows.
+      val ledgerRead = readLedger(spark, config.ledgerPath)
+      val ledger =
+        if (concurrent) ledgerRead.localCheckpoint(true) else ledgerRead
+      val decided = SyncOps.catalogLedgerDiff(srcCatalog, ledger, mid).cache()
       try {
-        // tagger failure is NOT a cycle failure: the objects ARE copied
-        // and the ledger upsert below must still record them, or every
-        // successful copy would be forgotten and re-copied (and re-tagged)
-        // next cycle. The failed tags surface in MappingReport.tagFailed;
-        // the next cycle's tagger sees only ITS copies, so re-tagging is
-        // the deployment's retry loop (PostCopyTagger scaladoc contract).
-        if (!tagged.isEmpty) tagger.tag(mid, dstUri, tagged)
-      } catch {
-        case e: Exception if !isInterruption(e) =>
-          // count over the pinned blocks; if even that fails the session
-          // is broken and the -1 sentinel says "failed, count unknown"
-          tagFailed = try tagged.count()
-                      catch { case _: Exception => -1L }
-          val batchDesc =
-            if (tagFailed >= 0) s"a batch of $tagFailed object(s)"
-            else "a batch of unknown size (count failed)"
-          System.err.println(s"[sync] mapping $mid post-copy tagging " +
-            s"failed for $batchDesc: ${e.getClass.getName}: " +
-            s"${e.getMessage} - copies and ledger commit proceed; " +
-            "re-apply headers via the tagger's own retry path")
-      } finally graft.operators.Barriers.release(tagged)
-    }
+        val toCopy = SyncOps.needsSync(decided)
 
-    // 6e: ledger upsert from receipts (sync.go:179-196) — receipt status
-    // joined back to source metadata, then latest-wins merge
-    val updates = toCopy.alias("t")
-      .join(receipts.alias("r"), col("t.name") === col("r.object_name"))
-      .select(
-        lit(0L).as("id"),
-        lit(mid).as("mapping_id"),
-        col("t.name").as("object_name"),
-        col("t.size"),
-        col("t.last_modified"),
-        col("t.etag"),
-        col("t.content_type"),
-        current_timestamp().as("last_synced"),
-        col("r.sync_status"),
-        col("t.metadata"))
-    // driver-side collect is BOUNDED: syncOutcomeCounts groups by
-    // sync_status, so this frame is ≤ |distinct statuses| rows (3) per
-    // mapping regardless of catalog size
-    val counts = SyncOps.syncOutcomeCounts(decided, mid)
-      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-    val failed = updates.filter(col("sync_status") =!= "success").count()
+        // 6c-6d: distributed stream copy. Receipts MUST be materialized before
+        // reuse: the executor is side-effecting, and a lazy plan would re-run
+        // the copies once per downstream action.
+        val receipts = materialize(spark,
+          CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
+          scratch + "/copy_receipts")
 
-    // 8: orphans — delete from target, then from ledger (sync.go:199-234);
-    // failed deletes keep their ledger rows (sync.go:217-221)
-    val orphans = SyncOps.orphanAntiJoin(tgtCatalog, srcCatalog)
-    val deleteReceipts = materialize(spark,
-      CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF(),
-      scratch + "/delete_receipts")
-    val removedNames = deleteReceipts.filter(col("removed"))
-      .select(col("object_name").as("name"))
-    val removed = removedNames.count()
+        // post-copy tagging hook (README "Known limitations" → code): the
+        // reference sets Content-Type/user-metadata headers on every PUT;
+        // the Hadoop-FS copy path cannot, so a deployment-supplied tagger
+        // gets exactly the success receipts' header columns to re-apply via
+        // its provider SDK. Noop (the default) costs nothing; the guard
+        // keeps all-skip cycles from running a count job per mapping when
+        // no tagger is configured. The frame is pinned once (Barriers) so
+        // the isEmpty guard and the tagger's own action share one evaluation
+        // of the receipts join instead of running it twice (r15 advisory).
+        var tagFailed = 0L
+        if (!(tagger eq graft.sources.PostCopyTagger.Noop)) {
+          val tagged = graft.operators.Barriers.materialize(
+            SyncEngine.taggableReceipts(toCopy, receipts), eager = true)
+          try {
+            // tagger failure is NOT a cycle failure: the objects ARE copied
+            // and the ledger upsert below must still record them, or every
+            // successful copy would be forgotten and re-copied (and re-tagged)
+            // next cycle. The failed tags surface in MappingReport.tagFailed;
+            // the next cycle's tagger sees only ITS copies, so re-tagging is
+            // the deployment's retry loop (PostCopyTagger scaladoc contract).
+            if (!tagged.isEmpty) tagger.tag(mid, dstUri, tagged)
+          } catch {
+            case e: Exception if !isInterruption(e) =>
+              // count over the pinned blocks; if even that fails the session
+              // is broken and the -1 sentinel says "failed, count unknown"
+              tagFailed = try tagged.count()
+                          catch { case _: Exception => -1L }
+              val batchDesc =
+                if (tagFailed >= 0) s"a batch of $tagFailed object(s)"
+                else "a batch of unknown size (count failed)"
+              System.err.println(s"[sync] mapping $mid post-copy tagging " +
+                s"failed for $batchDesc: ${e.getClass.getName}: " +
+                s"${e.getMessage} - copies and ledger commit proceed; " +
+                "re-apply headers via the tagger's own retry path")
+          } finally graft.operators.Barriers.release(tagged)
+        }
 
-    // ledger COMMIT: reference ON-CONFLICT upsert semantics — the batch's
-    // rows win unconditionally (anti-join+union, no window sort over the
-    // ledger) — then the keyed delete of successfully-removed orphans.
-    // PARTITION-SCOPED (r13 verdict item 2): the ledger is partitioned by
-    // mapping_id and every mapping owns exactly one partition, so the
-    // commit reads, merges, and atomically swaps ONLY
-    // `mapping_id=<mid>/` under a lock keyed to that partition. At a
-    // 100 M-object fleet this makes the commit O(|this mapping|) I/O —
-    // the reference's per-row SQLite upsert cost model
-    // (internal/database/database.go:346-364) — and commits of DIFFERENT
-    // mappings no longer serialize at all; only two drivers syncing the
-    // SAME mapping contend. updates/doomed reference only materialized
-    // receipts and the pinned snapshot, so the in-lock work is the cheap
-    // per-partition merge, never the copies.
-    val doomed = removedNames.select(lit(mid).as("mapping_id"),
-                                     col("name").as("object_name"))
-    val changedRows = counts.getOrElse("sync_new", 0L) +
-      counts.getOrElse("sync_changed", 0L) + counts.getOrElse("sync_retry", 0L)
-    def commitLedger(): Unit = {
-      // re-read the CURRENT partition inside the critical section (never
-      // the cycle snapshot): a commit from another DRIVER syncing this
-      // same mapping — serialized by the partition lock file — must not
-      // be clobbered by a merge against stale state. We HOLD this
-      // partition's lock here, so the proof-of-life recovery wait is
-      // disabled (callerHoldsLock): our own heartbeat would keep the lock
-      // fresh forever, and under the lock no OTHER committer of this
-      // partition can be live — immediate roll-forward/back is safe.
-      val base = SyncEngine.readLedgerPartition(spark, config.ledgerPath,
-        mid, callerHoldsPartitionLock = true)
-      val merged = SyncOps.ledgerUpsert(base, updates)
-      val afterDelete = merged.join(doomed, Seq("mapping_id", "object_name"),
-                                    "left_anti")
-      SyncEngine.writeLedgerPartition(spark, afterDelete,
-        config.ledgerPath, mid)
-    }
-    // an all-skip cycle has nothing to commit — skipping the write keeps
-    // steady-state cycles from touching the ledger at all (and is what
-    // lets the partition-isolation spec pin other partitions' mtimes)
-    if (changedRows > 0 || removed > 0) {
-      // a pre-partition-layout (legacy whole-table) ledger is migrated
-      // once, under the global table lock, before any partition commit
-      SyncEngine.ensurePartitionedLayout(spark, config.ledgerPath)
-      // two locks, two scopes: the JVM monitor serializes this driver's
-      // threads on the SAME partition (cheap, no FS round-trips while
-      // waiting); the lock FILE serializes across driver processes
-      // sharing the ledger path — the cross-process safety the reference
-      // inherited from SQLite's own file locking
-      // (internal/database/database.go:29-43)
-      val sfx = SyncEngine.partitionLockSuffix(mid)
-      SyncEngine.jvmMonitor(config.ledgerPath + sfx).synchronized {
-        SyncEngine.withLedgerFileLock(spark, config.ledgerPath,
-          lockSuffix = sfx)(commitLedger())
-      }
-    }
+        // 6e: ledger upsert from receipts (sync.go:179-196) — receipt status
+        // joined back to source metadata, then latest-wins merge
+        val updates = toCopy.alias("t")
+          .join(receipts.alias("r"), col("t.name") === col("r.object_name"))
+          .select(
+            lit(0L).as("id"),
+            lit(mid).as("mapping_id"),
+            col("t.name").as("object_name"),
+            col("t.size"),
+            col("t.last_modified"),
+            col("t.etag"),
+            col("t.content_type"),
+            current_timestamp().as("last_synced"),
+            col("r.sync_status"),
+            col("t.metadata"))
+        // driver-side collect is BOUNDED: syncOutcomeCounts groups by
+        // sync_status, so this frame is ≤ |distinct statuses| rows (3) per
+        // mapping regardless of catalog size
+        val counts = SyncOps.syncOutcomeCounts(decided, mid)
+          .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+        val failed = updates.filter(col("sync_status") =!= "success").count()
 
-    MappingReport(mid,
-      synced = counts.getOrElse("sync_new", 0L) +
-               counts.getOrElse("sync_changed", 0L) +
-               counts.getOrElse("sync_retry", 0L) - failed,
-      skipped = counts.getOrElse("skip", 0L),
-      failed = failed,
-      orphansRemoved = removed,
-      tagFailed = tagFailed)
+        // 8: orphans — delete from target, then from ledger (sync.go:199-234);
+        // failed deletes keep their ledger rows (sync.go:217-221)
+        val orphans = SyncOps.orphanAntiJoin(tgtCatalog, srcCatalog)
+        val deleteReceipts = materialize(spark,
+          CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF(),
+          scratch + "/delete_receipts")
+        val removedNames = deleteReceipts.filter(col("removed"))
+          .select(col("object_name").as("name"))
+        val removed = removedNames.count()
+
+        // ledger COMMIT: reference ON-CONFLICT upsert semantics — the batch's
+        // rows win unconditionally (anti-join+union, no window sort over the
+        // ledger) — then the keyed delete of successfully-removed orphans.
+        // PARTITION-SCOPED (r13 verdict item 2): the ledger is partitioned by
+        // mapping_id and every mapping owns exactly one partition, so the
+        // commit reads, merges, and atomically swaps ONLY
+        // `mapping_id=<mid>/` under a lock keyed to that partition. At a
+        // 100 M-object fleet this makes the commit O(|this mapping|) I/O —
+        // the reference's per-row SQLite upsert cost model
+        // (internal/database/database.go:346-364) — and commits of DIFFERENT
+        // mappings no longer serialize at all; only two drivers syncing the
+        // SAME mapping contend. updates/doomed reference only materialized
+        // receipts and the pinned snapshot, so the in-lock work is the cheap
+        // per-partition merge, never the copies.
+        val doomed = removedNames.select(lit(mid).as("mapping_id"),
+                                         col("name").as("object_name"))
+        val changedRows = counts.getOrElse("sync_new", 0L) +
+          counts.getOrElse("sync_changed", 0L) + counts.getOrElse("sync_retry", 0L)
+        def commitLedger(): Unit = {
+          // re-read the CURRENT partition inside the critical section (never
+          // the cycle snapshot): a commit from another DRIVER syncing this
+          // same mapping — serialized by the partition lock file — must not
+          // be clobbered by a merge against stale state. We HOLD this
+          // partition's lock here, so the proof-of-life recovery wait is
+          // disabled (callerHoldsLock): our own heartbeat would keep the lock
+          // fresh forever, and under the lock no OTHER committer of this
+          // partition can be live — immediate roll-forward/back is safe.
+          val base = SyncEngine.readLedgerPartition(spark, config.ledgerPath,
+            mid, callerHoldsPartitionLock = true)
+          val merged = SyncOps.ledgerUpsert(base, updates)
+          val afterDelete = merged.join(doomed, Seq("mapping_id", "object_name"),
+                                        "left_anti")
+          SyncEngine.writeLedgerPartition(spark, afterDelete,
+            config.ledgerPath, mid)
+        }
+        // an all-skip cycle has nothing to commit — skipping the write keeps
+        // steady-state cycles from touching the ledger at all (and is what
+        // lets the partition-isolation spec pin other partitions' mtimes)
+        if (changedRows > 0 || removed > 0) {
+          // a pre-partition-layout (legacy whole-table) ledger is migrated
+          // once, under the global table lock, before any partition commit
+          SyncEngine.ensurePartitionedLayout(spark, config.ledgerPath)
+          // two locks, two scopes: the JVM monitor serializes this driver's
+          // threads on the SAME partition (cheap, no FS round-trips while
+          // waiting); the lock FILE serializes across driver processes
+          // sharing the ledger path — the cross-process safety the reference
+          // inherited from SQLite's own file locking
+          // (internal/database/database.go:29-43)
+          val sfx = SyncEngine.partitionLockSuffix(mid)
+          SyncEngine.jvmMonitor(config.ledgerPath + sfx).synchronized {
+            SyncEngine.withLedgerFileLock(spark, config.ledgerPath,
+              lockSuffix = sfx)(commitLedger())
+          }
+        }
+
+        MappingReport(mid,
+          synced = counts.getOrElse("sync_new", 0L) +
+                   counts.getOrElse("sync_changed", 0L) +
+                   counts.getOrElse("sync_retry", 0L) - failed,
+          skipped = counts.getOrElse("skip", 0L),
+          failed = failed,
+          orphansRemoved = removed,
+          tagFailed = tagFailed)
+      } finally decided.unpersist(blocking = false)
+    } finally srcCatalog.unpersist(blocking = false)
   }
 
   /** Continuous mode (main.go:87-106): initial sync, then fixed-interval

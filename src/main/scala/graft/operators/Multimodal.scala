@@ -294,10 +294,10 @@ object Multimodal {
       threshold, dim, bands, rowsPerBand, maxBucket)
 
   /** The foreign screen's GEOMETRY over arbitrary caption/frame vector
-    * frames — split out of [[captionFrameHits]] so the entropy rehearsal
-    * (graft.tools.CaptionEntropyProbe) drives the exact declared plan
-    * with synthetic high-entropy vectors instead of a re-implementation.
-    * `caps` = (media_id, cv); `feats` = (vec_id, embedding).
+    * frames, shared by [[captionFrameHits]] and the match operators. Its
+    * scaling with high-entropy vectors was measured on this exact plan
+    * (SCALE.md "r17: the caption-match saturation claim, PROVEN by
+    * rehearsal"). `caps` = (media_id, cv); `feats` = (vec_id, embedding).
     */
   private[graft] def captionFrameHitsFrom(
       caps: DataFrame, feats: DataFrame, threshold: Double,

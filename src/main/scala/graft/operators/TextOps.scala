@@ -601,50 +601,10 @@ object TextOps {
     * must filter, mirroring how such docs drop out of the batch explode.
     */
   def withMinhashBandKeys(docs: DataFrame, k: Int = 8,
-                          bands: Int = 4): DataFrame = {
-    // `hof` keeps the r19 interpreted formulation selectable for A/B
-    // re-measurement (the graft.cc.impl precedent); both produce
-    // bit-identical band arrays (MinhashBandKeysSpec pins it).
-    val impl = docs.sparkSession.conf.getOption("graft.bandkeys.impl")
-      .orElse(sys.env.get("SPARK_GRAFT_BANDKEYS_IMPL")).getOrElse("native")
-    impl match {
-      case "native" =>
-        docs.withColumn("bands",
-          graft.functions.MinhashBandKeys.minhash_band_keys(
-            shingles(tokens(col("text")), 3), k, bands))
-      case "hof" => withMinhashBandKeysHof(docs, k, bands)
-      case other => throw new IllegalArgumentException(
-        s"graft.bandkeys.impl must be native|hof, got: $other")
-    }
-  }
-
-  /** The r19 per-row HOF formulation (staged md5 arrays +
-    * `array_min(transform(...))` per signature — interpreted eval), kept
-    * verbatim behind `graft.bandkeys.impl = hof` for A/B re-measurement
-    * against the native expression above.
-    */
-  private[operators] def withMinhashBandKeysHof(docs: DataFrame, k: Int,
-                                                bands: Int): DataFrame = {
-    val r = k / bands
-    val nMd5 = (k + MinhashSlicesPerMd5 - 1) / MinhashSlicesPerMd5
-    val withH = (0 until nMd5).foldLeft(
-      docs.withColumn("_sh", shingles(tokens(col("text")), 3))) { (df, h) =>
-      df.withColumn(s"_h$h", transform(col("_sh"), s =>
-        md5(if (h == 0) s else concat(lit(s"$h:"), s))))
-    }
-    def sig(i: Int): Column =
-      array_min(transform(col(s"_h${i / MinhashSlicesPerMd5}"), x =>
-        substring(x,
-          (i % MinhashSlicesPerMd5) * MinhashSliceHexChars + 1,
-          MinhashSliceHexChars)))
-    val bandArr = array((0 until bands).map { j =>
-      md5(concat_ws("|",
-        lit(j.toString) +: (0 until r).map(i => sig(j * r + i)): _*))
-    }: _*)
-    withH
-      .withColumn("bands", when(size(col("_sh")) > 0, bandArr))
-      .drop((0 until nMd5).map(h => s"_h$h") :+ "_sh": _*)
-  }
+                          bands: Int = 4): DataFrame =
+    docs.withColumn("bands",
+      graft.functions.MinhashBandKeys.minhash_band_keys(
+        shingles(tokens(col("text")), 3), k, bands))
 
   /** Exploded (doc_id, band) LSH keys via the BATCH signature path
     * (explode + partial-agg [[withMinhashSignature]], then the band

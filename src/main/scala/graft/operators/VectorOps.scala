@@ -500,8 +500,9 @@ object VectorOps {
     * linear in the corpus. Below the cap (every declared scale factor)
     * E = centroidEvery and results are bit-identical to the uncapped form;
     * recall is governed by the probe FRACTION (a constant share of the
-    * corpus is searched at any list granularity — the IvfScaleProbe
-    * falsification), so the cap trades nothing measurable. The oracle
+    * corpus is searched at any list granularity — the r11 falsification
+    * recorded in SCALE.md "ANN accuracy contract" and "sf1 rehearsal",
+    * item 3), so the cap trades nothing measurable. The oracle
     * derives the same E and nProbe with scalar subqueries.
     */
   def topkCosineIvfAuto(corpus: DataFrame, k: Int,
@@ -645,22 +646,20 @@ object VectorOps {
 
     // barrier per round: the loop would otherwise grow one crossJoin+agg
     // of plan per pass AND recompute every prior pass each action
-    var assigned = LoopProbe.timed("kmeans", 0, "assign0") {
-      Barriers.materialize(assign(cent0), eager = true) }
+    var assigned = Barriers.materialize(assign(cent0), eager = true)
     var itersRun = 0
     var converged = false
     while (itersRun < maxIter && !converged) {
-      val next = LoopProbe.timed("kmeans", itersRun + 1, "refine") {
-        Barriers.materialize(refine(assigned), eager = true) }
+      val next = Barriers.materialize(refine(assigned), eager = true)
       // fixpoint test only when another pass could be skipped; one n-row
       // equi-join + count between two materialized frames
       if (itersRun + 1 < maxIter) {
-        val changed = LoopProbe.timed("kmeans", itersRun + 1, "converge") {
+        val changed =
           next.select(col("vec_id"), col("cluster_id").as("c2"))
             .join(assigned.select(col("vec_id"), col("cluster_id").as("c1")),
                   Seq("vec_id"))
             .filter(col("c1") =!= col("c2"))
-            .count() }
+            .count()
         if (changed == 0) converged = true
       }
       Barriers.release(assigned)

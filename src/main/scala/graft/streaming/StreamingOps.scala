@@ -1,10 +1,12 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Structured Streaming operators over the events table: watermarked
   * windowed aggregation and custom-state sessionization
@@ -149,7 +151,6 @@ object StreamingOps {
   private def streamShufflePartitions(spark: SparkSession): String = {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.conf.getOption("graft.stream.shufflePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS")) // harness A/B knob
       .getOrElse(math.min(8, session).toString)
   }
 
@@ -157,6 +158,8 @@ object StreamingOps {
     "spark.sql.streaming.stateStore.providerClass"
   private val RocksDBProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val RocksDBChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   /** Run the stream to a memory sink and return the drained table.
     *
@@ -174,16 +177,43 @@ object StreamingOps {
     * default recommendation regardless (SCALE.md sizing table) because
     * heap-resident state is the thing that falls over first.
     */
-  private def runToTable(spark: SparkSession, df: DataFrame,
-                         mode: OutputMode,
-                         largeState: Boolean = false): DataFrame = {
+  private[graft] def runToTable(spark: SparkSession, df: DataFrame,
+                                mode: OutputMode,
+                                largeState: Boolean = false): DataFrame = {
     val name = s"graft_stream_${counter.incrementAndGet()}"
-    // Conf values are captured when the query's first batch plans (and
-    // pinned in its checkpoint thereafter); restore the session values
-    // only after the drain so the settings cannot leak into batch queries
-    // while staying race-free for this stream. Queries run sequentially in
-    // this harness (Verify/Bench), so the temporary session mutation has
-    // no concurrent observer.
+    // copy out of the memory sink so the result survives the query stop
+    try drain(spark, df, largeState)(
+      (w, _) => w.outputMode(mode).format("memory").queryName(name))(
+      _ => spark.table(name).localCheckpoint(eager = true))
+    finally spark.catalog.dropTempView(name)
+  }
+
+  /** Prefix of every drain's scratch dir under `java.io.tmpdir`. */
+  private[graft] val DrainScratchPrefix = "graft_drain_"
+
+  /** The one stream drain behind [[runToTable]], [[runUpdatesToDeltaLog]]
+    * and [[runAppendToFiles]]: start `df` with the sink-specific writer
+    * setup `sink(writer, dataDir)`, run it to completion
+    * (`processAllAvailable`), stop it, and return `result(dataDir)`.
+    *
+    * Conf values are captured when the query's first batch plans (and
+    * pinned in its checkpoint thereafter); the stream overrides (shuffle
+    * partitions, plus the RocksDB keys when `largeState`) are set for the
+    * drain and the session values restored after it, even when the
+    * stream throws, so the settings cannot leak into batch queries.
+    * Queries run sequentially in the harness (Verify/Bench), so the
+    * temporary session mutation has no concurrent observer.
+    *
+    * Each drain owns one scratch dir (`DrainScratchPrefix`…): the query
+    * checkpoint and `dataDir` live under it, and it is deleted in a
+    * `finally` after `result` has pinned what it needs — bench reps ×
+    * queries would otherwise accumulate a log + checkpoint per
+    * invocation, failed ones included.
+    */
+  private[graft] def drain(spark: SparkSession, df: DataFrame,
+                           largeState: Boolean = false)(
+      sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row])(
+      result: String => DataFrame): DataFrame = {
     val overrides =
       Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark)) ++
         (if (largeState) Map(
@@ -191,28 +221,46 @@ object StreamingOps {
           // changelog checkpointing commits only the trigger's delta to
           // the checkpoint instead of snapshotting each store's full
           // SST set per commit — the commit path for frequent triggers
-          // over table-sized state at any scale (A/B'd at sf0.1 in r19:
-          // see OPTIMIZATION_r19.md; overridable for re-measurement)
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-            sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+          // over table-sized state at any scale (A/B'd at sf0.1 in r19
+          // and r20: OPTIMIZATION_r19.md, OPTIMIZATION_r20.md)
+          RocksDBChangelogKey -> "true")
         else Map.empty)
-    val saved = overrides.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(mode).format("memory")
-        .queryName(name).start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    // copy out of the memory sink so the result survives the query stop
-    val out = spark.table(name).localCheckpoint(eager = true)
-    spark.catalog.dropTempView(name)
-    out
+    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val base = java.nio.file.Files.createTempDirectory(
+      s"$DrainScratchPrefix${counter.incrementAndGet()}_")
+    val dataDir = base.resolve("data").toString
+    try {
+      try {
+        overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+        val q = sink(df.writeStream
+          .option("checkpointLocation", base.resolve("ckpt").toString),
+          dataDir).start()
+        try q.processAllAvailable() finally q.stop()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      result(dataDir)
+    } finally deleteRecursively(base.toFile)
+  }
+
+  /** The parquet files a drain's sink wrote under `dataDir`, pinned to
+    * block storage. An empty source fires no trigger and writes no files —
+    * a legitimate empty result of the declared `schema`, not a read
+    * error.
+    */
+  private def readDrained(spark: SparkSession, dataDir: String,
+                          schema: StructType): DataFrame = {
+    val hasData = Option(new java.io.File(dataDir).listFiles()).exists(
+      _.exists(f => f.isFile && f.getName.endsWith(".parquet")))
+    if (hasData) spark.read.parquet(dataDir).localCheckpoint(eager = true)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    val children = f.listFiles()
+    if (children != null) children.foreach(deleteRecursively)
+    f.delete(): Unit
   }
 
   /** Watermarked tumbling-window counts; complete mode so the finite input
@@ -1245,56 +1293,18 @@ object StreamingOps {
     * [[latestPerKey]]); exposed private[graft] so specs can assert the
     * per-trigger sink volume really is O(changed keys).
     *
-    * Same session-conf discipline as [[runToTable]] (stream shuffle
-    * partitions overridden for the query, restored after the drain).
+    * Conf overrides and scratch dirs follow [[drain]].
     */
   private[graft] def runUpdatesToDeltaLog(spark: SparkSession,
-                                          df: DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      s"graft_updates_${counter.incrementAndGet()}_")
-    val dataDir = base.resolve("data").toString
-    val ckptDir = base.resolve("ckpt").toString
-    val overrides =
-      Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark))
-    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(OutputMode.Update())
-        .option("checkpointLocation", ckptDir)
+                                          df: DataFrame): DataFrame =
+    drain(spark, df) { (w, dataDir) =>
+      w.outputMode(OutputMode.Update())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // append = the delta log; an empty trigger appends nothing
           batch.withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(dataDir)
-        }.start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    // pin the log in block storage, then remove the scratch dirs — the
-    // drain must not leak a delta log + checkpoint per invocation
-    // (bench reps × queries would otherwise accumulate them for the
-    // machine's lifetime). An EMPTY source fires no trigger at all, so
-    // the data dir may never have been created — that is a legitimate
-    // empty delta log (schema = aggregate schema + batch_id), not a
-    // read error.
-    val out =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(dataDir)))
-        spark.read.parquet(dataDir).localCheckpoint(eager = true)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        df.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-    deleteRecursively(base.toFile)
-    out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+        }
+    }(readDrained(spark, _, df.schema.add("batch_id", LongType)))
 
   /** Append-mode drain through Spark's NATIVE parquet file sink instead
     * of the harness memory sink — the deployment form (r17 verdict item
@@ -1308,46 +1318,14 @@ object StreamingOps {
     * Exactly-once comes from the sink's _spark_metadata commit log — this
     * IS what a production job writes, not a harness stand-in.
     *
-    * An empty source fires no trigger and writes no files — a legitimate
-    * empty result (the declared schema), not a read error. Scratch dirs
-    * are pinned to block storage then removed, the
-    * [[runUpdatesToDeltaLog]] hygiene.
+    * Conf overrides and scratch dirs follow [[drain]].
     */
   private[graft] def runAppendToFiles(spark: SparkSession,
-                                      df: DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      s"graft_append_${counter.incrementAndGet()}_")
-    val dataDir = base.resolve("data").toString
-    val ckptDir = base.resolve("ckpt").toString
-    val overrides =
-      Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark))
-    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", dataDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    val hasData = {
-      val d = new java.io.File(dataDir)
-      d.exists && Option(d.listFiles()).exists(
-        _.exists(f => f.isFile && f.getName.endsWith(".parquet")))
-    }
-    val out =
-      if (hasData) spark.read.parquet(dataDir).localCheckpoint(eager = true)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    deleteRecursively(base.toFile)
-    out
-  }
+                                      df: DataFrame): DataFrame =
+    drain(spark, df)(
+      (w, dataDir) => w.outputMode(OutputMode.Append())
+        .format("parquet").option("path", dataDir))(
+      readDrained(spark, _, df.schema))
 
   /** Latest-wins reduction of an Update-mode delta log: the newest
     * batch_id's row per key IS the final aggregate (each update carries

@@ -10,6 +10,34 @@ class CorpusOpsSpec extends AnyFunSuite {
   lazy val spark = Spec.spark
   import spark.implicits._
 
+  /** Independent model of [[CorpusOps.connectedComponents]]: driver-side
+    * union-find where every root is its set's minimum id, so each node's
+    * root is its component's min. Edge endpoints outside `nodes` conduct
+    * connectivity and can be a label, the operator's defined semantics.
+    */
+  private def unionFindLabels(nodes: Seq[Long],
+                              edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  private def components(nodes: Seq[Long], edges: Seq[(Long, Long)],
+                         maxIter: Int = 20): Map[Long, Long] = {
+    val got = CorpusOps.connectedComponents(nodes.toDF("doc_id"),
+        edges.toDF("doc_a", "doc_b"), maxIter)
+      .as[(Long, Long)].collect()
+    assert(got.length == nodes.length, "one row per node")
+    got.toMap
+  }
+
   test("keepBestPerCluster keeps the longest doc per cluster, ties by id") {
     val assign = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 4L))
       .toDF("doc_id", "cluster_id")
@@ -44,44 +72,48 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("components converge within the doubling bound, throw below it") {
-    val n = 6
-    val nodes = (1L to n.toLong).toDF("doc_id")
-    val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong))
-      .toDF("doc_a", "doc_b")
+    val nodes = 1L to 6L
+    val edges = (1L until 6L).map(i => (i, i + 1))
     // contraction + jump: the diameter-5 ordered chain needs round 1 plus
     // exactly 3 contraction rounds (reach doubles per round); maxIter
     // bounds the contraction rounds, so 3 passes and 2 must throw
     // (correct labels + throw = bug; wrong labels + no throw = worse)
-    val got = CorpusOps.connectedComponents(nodes, edges, maxIter = 3)
-      .as[(Long, Long)].collect()
-    assert(got.forall(_._2 == 1L))
-    intercept[IllegalStateException] {
-      CorpusOps.connectedComponents(nodes, edges, maxIter = 2)
-    }
-    // the r19 jump loop stays available for A/B under graft.cc.impl and
-    // must compute the identical fixpoint at its own round semantics
-    val jump = CorpusOps.connectedComponentsJump(nodes, edges, maxIter = 4)
-      .as[(Long, Long)].collect()
-    assert(jump.forall(_._2 == 1L))
+    val got = components(nodes, edges, maxIter = 3)
+    assert(got == unionFindLabels(nodes, edges))
+    assert(got.values.forall(_ == 1L))
+    intercept[IllegalStateException](components(nodes, edges, maxIter = 2))
   }
 
   test("contraction components: random-id chain converges in O(log n) " +
-       "rounds and matches the jump loop") {
+       "rounds and matches a union-find model") {
     // random id placement along a chain is the shape pointer jumping
     // cannot accelerate (r19 probe: ~40-70 rounds for 200 nodes under any
     // jump depth); contraction merges at every local minimum, so the
     // graph collapses geometrically — maxIter 10 must cover 200 nodes
     val rnd = new scala.util.Random(7)
     val ids = rnd.shuffle((1L to 200L).toVector)
-    val nodes = ids.toDF("doc_id")
     val edges = (0 until 199).map(i => (ids(i), ids(i + 1)))
-      .toDF("doc_a", "doc_b")
-    val got = CorpusOps.connectedComponents(nodes, edges, maxIter = 10)
-      .as[(Long, Long)].collect().toMap
+    val got = components(ids, edges, maxIter = 10)
+    assert(got == unionFindLabels(ids, edges))
     assert(got.size == 200 && got.values.forall(_ == 1L))
-    val jump = CorpusOps.connectedComponentsJump(nodes, edges, maxIter = 200)
-      .as[(Long, Long)].collect().toMap
-    assert(jump == got)
+  }
+
+  test("connected components equal a union-find model on a seeded " +
+       "random graph") {
+    // 300 shuffled ids: six random trees of 40 nodes plus extra in-group
+    // edges (cycles, shortcuts) and 60 singletons
+    val rnd = new scala.util.Random(11)
+    val ids = rnd.shuffle((1L to 300L).toVector)
+    val edges = ids.take(240).grouped(40).toSeq.flatMap { g =>
+      val tree = (1 until g.length).map(i => (g(i), g(rnd.nextInt(i))))
+      val extra = Seq.fill(10)((g(rnd.nextInt(g.length)),
+                                g(rnd.nextInt(g.length))))
+      tree ++ extra.filter { case (a, b) => a != b }
+    }
+    val model = unionFindLabels(ids, edges)
+    val sizes = model.values.groupBy(identity).values.map(_.size)
+    assert(sizes.count(_ == 40) == 6 && sizes.count(_ == 1) == 60)
+    assert(components(ids, edges) == model)
   }
 
   test("contraction components: a foreign edge endpoint conducts " +
@@ -90,10 +122,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     // and the foreign min id becomes the component label (the defined
     // tolerance the scaladoc states; the jump lookup is a left join so
     // no node's row is lost)
-    val nodes = Seq(5L, 9L, 12L).toDF("doc_id")
-    val edges = Seq((5L, 0L), (0L, 9L)).toDF("doc_a", "doc_b")
-    val got = CorpusOps.connectedComponents(nodes, edges)
-      .as[(Long, Long)].collect().toMap
+    val nodes = Seq(5L, 9L, 12L)
+    val edges = Seq((5L, 0L), (0L, 9L))
+    val got = components(nodes, edges)
+    assert(got == unionFindLabels(nodes, edges))
     assert(got == Map(5L -> 0L, 9L -> 0L, 12L -> 12L))
   }
 

@@ -930,4 +930,56 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(reduced == Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L))
   }
+
+  test("every drain restores the session conf and removes its scratch " +
+       "dir, whether the stream finishes or throws") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    import org.apache.spark.sql.streaming.OutputMode
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val sinks: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "memory" -> (df => StreamingOps.runToTable(spark, df,
+        OutputMode.Append(), largeState = true)),
+      "delta log" -> (df => StreamingOps.runUpdatesToDeltaLog(spark, df)),
+      "files" -> (df => StreamingOps.runAppendToFiles(spark, df)))
+    // every key a drain overrides; a session value (11) the stream value
+    // (min(8, session)) differs from, so a missed restore shows
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(): Set[String] =
+      Option(tmp.listFiles()).toSeq.flatten.map(_.getName)
+        .filter(_.startsWith(StreamingOps.DrainScratchPrefix)).toSet
+    // one batch of ids; id -1 makes that batch throw mid-drain
+    def stream(ids: Long*): DataFrame = {
+      val mem = MemoryStream[Long]
+      mem.addData(ids)
+      mem.toDF().select(when(col("value") < 0, raise_error(lit("boom")))
+        .otherwise(col("value")).as("id"))
+    }
+    val session = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "11")
+    try {
+      val conf = keys.map(spark.conf.getOption)
+      assert(conf.head.contains("11"))
+      for ((sink, drain) <- sinks) {
+        val before = scratchDirs()
+        val got = drain(stream(1L, 2L, 3L)).select("id").as[Long]
+          .collect().toSet
+        assert(got == Set(1L, 2L, 3L), sink)
+        assert(keys.map(spark.conf.getOption) == conf, s"$sink: clean run")
+        assert(scratchDirs() -- before == Set.empty, s"$sink: clean run")
+
+        val err = intercept[Exception](drain(stream(1L, -1L)))
+        assert(Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).exists(e =>
+            Option(e.getMessage).exists(_.contains("boom"))), sink)
+        assert(keys.map(spark.conf.getOption) == conf, s"$sink: failed run")
+        assert(scratchDirs() -- before == Set.empty, s"$sink: failed run")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", session)
+  }
 }

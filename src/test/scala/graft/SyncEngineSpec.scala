@@ -977,4 +977,31 @@ class SyncEngineSpec extends AnyFunSuite {
       s"copies were forgotten after a tagging failure: ${r2.head}")
     assert(r2.head.tagFailed == 0)
   }
+
+  test("sync cycles release their cached frames: no persisted RDD " +
+       "accumulates across churn cycles") {
+    // ContinuousSync runs syncAll() once per tick, so a frame a cycle
+    // caches and never releases grows the heap every tick
+    val root = Files.createTempDirectory("graft-sync-pins")
+    (1 to 6).foreach(i => write(root.resolve(s"src/f$i.txt"), s"v$i"))
+    val engine = new SyncEngine(spark, mkConfig(root))
+    def persisted(): Int = spark.sparkContext.getPersistentRDDs.size
+    // churn per cycle: one modified (new size), one added, one deleted
+    def cycle(c: Int): Unit = {
+      if (c > 1) {
+        write(root.resolve(s"src/f${c + 1}.txt"), "x" * (10 + c))
+        write(root.resolve(s"src/new$c.txt"), s"new$c")
+        Files.delete(root.resolve(s"src/f${c - 1}.txt"))
+      }
+      val r = engine.syncAll().head
+      assert(r.failed == 0 && r.synced == (if (c == 1) 6 else 2), s"$c: $r")
+      assert(r.orphansRemoved == (if (c == 1) 0 else 1), s"$c: $r")
+    }
+    cycle(1)
+    val afterFirst = persisted()
+    cycle(2)
+    cycle(3)
+    assert(persisted() == afterFirst,
+      s"persisted RDDs grew from $afterFirst to ${persisted()} in 2 cycles")
+  }
 }
